@@ -1065,7 +1065,7 @@ def q_rule_predictions(spark, sf_dir):
 
     train, test, revisions, state = _rule_eval_inputs(spark, sf_dir)
     rules, _ = mine_basic_rules(train, revisions)
-    applied = apply_rules(rules, test, revisions, state, with_provenance=True)
+    applied = apply_rules(rules, test, revisions, state)
     return applied.filter(F.col("predicted").isNotNull()).select(
         "constraint_id",
         "corr_rev",

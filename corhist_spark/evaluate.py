@@ -9,12 +9,18 @@ Transcribes:
 - `DeletionBaseline.java:18-32` and `AdditionBaseline.java:24-110`.
 - `TuningMiner.java:22-56`: seeded CV split (>100 rows: 10% train /
   90% CV — the reference's inverted-ratio behavior, replicated
-  deliberately) + confidence-threshold sweep keeping max F1.
+  deliberately) + confidence-threshold sweep keeping max F1.  The
+  sweep applies the rules once: with confidence as the first rank key,
+  the rule firing at threshold t is the unthresholded winner when its
+  confidence >= t and none otherwise, so one aggregate over the fired
+  rows scores every threshold.
 
 Rule application is a broadcast join + rank window, not a per-row loop:
 first-match-by-rank becomes row_number() = 1 over
 (confidence desc, support desc, rule_id) — rule_id as the deterministic
-tiebreak the reference leaves to hash order (SURVEY §7.3.1).
+tiebreak the reference leaves to hash order (SURVEY §7.3.1).  The one
+plan (`_first_match`) also serves the game queue
+(`game.build_possible_corrections`), which only drops the as-of ``g``.
 """
 
 from __future__ import annotations
@@ -44,112 +50,87 @@ def _with_test_id(test: DataFrame) -> DataFrame:
     )
 
 
-def apply_rules(
-    rules: DataFrame,
-    test: DataFrame,
-    revisions: DataFrame,
-    state: DataFrame,
-    with_provenance: bool = False,
-) -> DataFrame:
-    """-> (test_id, constraint_id, correction, predicted) with one row
-    per test correction; predicted is NULL when no rule fired.  With
-    ``with_provenance`` the row additionally carries the fired rule's
-    identity (corr_rev, target_*, rule_id, support, confidence) — the
-    per-prediction audit trail a reviewer reads before trusting an
-    automated edit (same plan, two extra carried columns)."""
-    t = _with_test_id(corrections_with_g(test, revisions)).cache()
+def _first_match(cases: DataFrame, key: str, rules: DataFrame, facts: DataFrame) -> DataFrame:
+    """First-match rule application, shared by evaluation, tuning and
+    the game queue.  cases(key, constraint_id, s, o[, g]) x rules x
+    facts(subj, pred, obj[, from_rev, to_rev]) -> (key, rule_id,
+    support, confidence, predicted) for every case a rule fires on.
 
-    r = F.broadcast(rules.select("rule_id", "constraint_id", "violation_obj", "head", "context", "support", "confidence"))
-    m = t.join(
-        r,
-        (t["constraint_id"] == r["constraint_id"])
-        & (r["violation_obj"].isNull() | (r["violation_obj"] == t["target_obj"])),
-    ).drop(r["constraint_id"])
-
-    # context satisfaction (0 or 1 depth-1 atoms): existence of the
-    # instantiated atom in globalState(g)
-    m = m.withColumn("atom", F.explode_outer("context"))
-    st = state.select(
-        F.col("subj").alias("st_subj"),
-        F.col("pred").alias("st_pred"),
-        F.col("obj").alias("st_obj"),
-        F.col("from_rev").alias("st_from"),
-        F.col("to_rev").alias("st_to"),
+    A rule matches on constraint_id and violation_obj (NULL = any o);
+    its context (0 or 1 depth-1 atoms) must exist among the facts.
+    When the cases carry g the atom is looked up in globalState(g)
+    (from_rev <= g < to_rev); without g the facts are a live snapshot —
+    dropping that one term is the reference's ``removeContext``
+    (`CorrectionLookup.java:56-66`).  The highest-ranked survivor wins
+    and its head is instantiated ('?s' -> s, '?o' -> o)."""
+    r = F.broadcast(
+        rules.select("rule_id", "constraint_id", "violation_obj", "head", "context", "support", "confidence")
     )
-    val = F.when(F.col("atom.var") == "?s", F.col("target_subj")).otherwise(F.col("target_obj"))
-    sat = (
-        m.filter(F.col("atom").isNotNull())
-        .join(
-            st,
-            (F.col("st_subj") == val)
-            & (F.col("st_pred") == F.col("atom.pred"))
-            & ((F.col("atom.obj") == "?v") | (F.col("st_obj") == F.col("atom.obj")))
-            & (F.col("st_from") <= F.col("g"))
-            & (F.col("g") < F.col("st_to")),
-            "left_semi",
-        )
-        .select("test_id", "rule_id")
-    )
-    ok = (
-        m.filter(F.col("atom").isNull())
-        .select("test_id", "rule_id", "head", "support", "confidence")
-        .unionByName(
-            m.filter(F.col("atom").isNotNull())
-            .join(sat, ["test_id", "rule_id"], "left_semi")
-            .select("test_id", "rule_id", "head", "support", "confidence")
-        )
+    m = (
+        cases.join(r, "constraint_id")
+        .filter(F.col("violation_obj").isNull() | (F.col("violation_obj") == F.col("o")))
+        .withColumn("atom", F.explode_outer("context"))
     )
 
-    w = Window.partitionBy("test_id").orderBy(
-        F.desc("confidence"), F.desc("support"), F.asc("rule_id")
+    holds = (
+        (F.col("subj") == F.when(F.col("atom.var") == "?s", F.col("s")).otherwise(F.col("o")))
+        & (F.col("pred") == F.col("atom.pred"))
+        & ((F.col("atom.obj") == "?v") | (F.col("obj") == F.col("atom.obj")))
     )
-    first = ok.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    if "g" in cases.columns:
+        holds &= (F.col("from_rev") <= F.col("g")) & (F.col("g") < F.col("to_rev"))
+    ok = m.filter(F.col("atom").isNull()).unionByName(
+        m.filter(F.col("atom").isNotNull()).join(facts, holds, "left_semi")
+    )
 
-    # instantiate head: '?s' -> target_subj, '?o' -> target_obj
-    first = first.join(
-        t.select("test_id", "target_subj", "target_obj"), "test_id"
-    ).withColumn(
-        "predicted",
-        F.array_sort(
-            F.transform(
-                "head",
-                lambda p: F.struct(
-                    F.when(p["subj"] == "?s", F.col("target_subj"))
-                    .when(p["subj"] == "?o", F.col("target_obj"))
-                    .otherwise(p["subj"])
-                    .alias("subj"),
-                    p["pred"].alias("pred"),
-                    F.when(p["obj"] == "?s", F.col("target_subj"))
-                    .when(p["obj"] == "?o", F.col("target_obj"))
-                    .otherwise(p["obj"])
-                    .alias("obj"),
-                    p["op"].alias("op"),
-                ),
-            )
-        ),
+    w = Window.partitionBy(key).orderBy(F.desc("confidence"), F.desc("support"), F.asc("rule_id"))
+    sub = lambda term: (
+        F.when(term == "?s", F.col("s")).when(term == "?o", F.col("o")).otherwise(term)
     )
-    if with_provenance:
-        return t.join(
-            first.select(
-                "test_id", "predicted", "rule_id", "support", "confidence"
+    predicted = F.array_sort(
+        F.transform(
+            "head",
+            lambda p: F.struct(
+                sub(p["subj"]).alias("subj"),
+                p["pred"].alias("pred"),
+                sub(p["obj"]).alias("obj"),
+                p["op"].alias("op"),
             ),
-            "test_id",
-            "left",
-        ).select(
-            "test_id",
-            "constraint_id",
-            "corr_rev",
-            "target_subj",
-            "target_pred",
-            "target_obj",
-            "correction",
-            "predicted",
-            "rule_id",
-            "support",
-            "confidence",
         )
-    return t.join(first.select("test_id", "predicted"), "test_id", "left").select(
-        "test_id", "constraint_id", "correction", "predicted"
+    )
+    return (
+        ok.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(key, "rule_id", "support", "confidence", predicted.alias("predicted"))
+    )
+
+
+def apply_rules(rules: DataFrame, test: DataFrame, revisions: DataFrame, state: DataFrame) -> DataFrame:
+    """-> one row per test correction (test_id, constraint_id, corr_rev,
+    target_*, correction, predicted, rule_id, support, confidence):
+    the fired rule's prediction and identity — the audit trail a
+    reviewer reads before trusting an automated edit — all NULL when
+    no rule fired."""
+    t = _with_test_id(corrections_with_g(test, revisions))
+    cases = t.select(
+        "test_id",
+        "constraint_id",
+        F.col("target_subj").alias("s"),
+        F.col("target_obj").alias("o"),
+        "g",
+    )
+    return t.join(_first_match(cases, "test_id", rules, state), "test_id", "left").select(
+        "test_id",
+        "constraint_id",
+        "corr_rev",
+        "target_subj",
+        "target_pred",
+        "target_obj",
+        "correction",
+        "predicted",
+        "rule_id",
+        "support",
+        "confidence",
     )
 
 
@@ -319,6 +300,13 @@ def aggregate_stats(stats: DataFrame, constraints_pdf) -> DataFrame:
     )
 
 
+# `TuningMiner.java:11-12,25-37`: split into train/CV only above 100
+# corrections (`size() > 100`)
+SPLIT_THRESHOLD = 100
+# `TuningMiner.java:40-55`: 0.55, 0.60, ..., 1.0
+THRESHOLDS = [round(0.55 + 0.05 * i, 2) for i in range(10)]
+
+
 def train_test_split(corrections: DataFrame, ratio: float = 0.8, seed: int = 42):
     """`mining/Main.java:281-291` with a seed (SURVEY §7.3.2)."""
     withr = corrections.withColumn("_r", F.rand(seed))
@@ -327,26 +315,12 @@ def train_test_split(corrections: DataFrame, ratio: float = 0.8, seed: int = 42)
     return train, test
 
 
-def _f1_of(applied: DataFrame) -> float:
-    row = (
-        evaluation_metrics(applied)
-        .agg(F.sum("total").alias("n"), F.sum(F.col("found")).alias("found"), F.sum("good").alias("good"))
-        .collect()[0]
-    )
-    if row.n == 0:
-        return 0.0
-    p = 1.0 if row.found == 0 else row.good / row.found
-    r = row.found / row.n
-    return 0.0 if p + r == 0 else 2 * p * r / (p + r)
-
-
 def tune(
     rules: DataFrame,
     corrections: DataFrame,
     revisions: DataFrame,
     state: DataFrame,
     seed: int = 42,
-    split_threshold: int = 100,
     mine=None,
 ) -> DataFrame:
     """`TuningMiner.java:22-56`: confidence-threshold sweep keeping the
@@ -359,25 +333,44 @@ def tune(
     ``bestRules = miner.mine(trainSet)`` at `TuningMiner.java:41` —
     so the thresholds are evaluated on data the rules were not mined
     from.  Without the callback the pre-mined ``rules`` are swept
-    as-is (caller is responsible for the split)."""
-    n = corrections.count()
-    if n > split_threshold:
+    as-is (caller is responsible for the split).
+
+    The rules are applied once: the rank orders by confidence first, so
+    at threshold t the unthresholded winner still fires iff its
+    confidence >= t, and nothing else can.  One aggregate over the
+    fired rows scores the unfiltered set and every threshold; the first
+    strict F1 maximum wins, as in the reference's loop."""
+    split = corrections.count() > SPLIT_THRESHOLD
+    if split:
         withr = corrections.withColumn("_r", F.rand(seed))
         train = withr.filter(F.col("_r") < 0.10).drop("_r")
+        # rand() lineage: pin the CV rows while apply_rules reads them twice
         cv = withr.filter(F.col("_r") >= 0.10).drop("_r").cache()
     else:
-        train = corrections
-        cv = corrections
+        train = cv = corrections
     if mine is not None:
         rules = mine(train)
-    rules = rules.cache()
-    best_rules, best_thr = rules, None
-    best_f1 = _f1_of(apply_rules(rules, cv, revisions, state))
-    thr = 0.55
-    while thr <= 1.0 + 1e-9:
-        cand = rules.filter(F.col("confidence") >= thr)
-        f1 = _f1_of(apply_rules(cand, cv, revisions, state))
-        if f1 > best_f1:
-            best_rules, best_f1, best_thr = cand, f1, thr
-        thr = round(thr + 0.05, 2)
-    return best_rules
+    applied = apply_rules(rules, cv, revisions, state)
+    fired = F.col("predicted").isNotNull()
+    good = fired & (F.col("predicted") == F.array_sort("correction"))
+    # None = the unfiltered rule set, scored first like the reference
+    thresholds = [None] + THRESHOLDS
+    kept = lambda thr: F.lit(True) if thr is None else F.col("confidence") >= thr
+    try:
+        row = applied.agg(
+            F.count(F.lit(1)),
+            *(F.count(F.when(c & kept(thr), 1)) for thr in thresholds for c in (fired, good)),
+        ).collect()[0]
+    finally:
+        if split:
+            cv.unpersist()
+    n = row[0]
+
+    def f1(found, n_good):
+        p = 1.0 if found == 0 else n_good / found
+        r = found / n if n else 0.0
+        return 0.0 if p + r == 0 else 2 * p * r / (p + r)
+
+    scores = [f1(row[1 + 2 * i], row[2 + 2 * i]) for i in range(len(thresholds))]
+    best_thr = thresholds[scores.index(max(scores))]  # first strict maximum
+    return rules if best_thr is None else rules.filter(F.col("confidence") >= best_thr)

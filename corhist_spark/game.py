@@ -22,20 +22,24 @@ test (`CorrectionLookup.java:86-102`): rows (subj, pred, obj) with
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .evaluate import _first_match
 
 
 def build_possible_corrections(
     rules: DataFrame, violations: DataFrame, snapshot: DataFrame
 ) -> DataFrame:
     """violations(violation_id, entity, property, statement_id,
-    constraint_id) x snapshot(subj, pred, obj) -> + predicted
-    correction (array<struct<subj,pred,obj,op>>, NULL when no rule
-    fires).
+    constraint_id) x snapshot(subj, pred, obj) -> + target_obj and the
+    predicted correction (array<struct<subj,pred,obj,op>>, NULL when no
+    rule fires).
 
     The violating object is resolved via the statement node
-    (`statement ps:prop ?o`), mirroring `CorrectionLookup.java:69-71`.
+    (`statement ps:prop ?o`), mirroring `CorrectionLookup.java:69-71`;
+    rules are then applied by the evaluator's first-match plan with the
+    direct edges as context facts and no as-of ``g`` (`removeContext`).
     """
     ps = snapshot.filter(F.col("pred").startswith("ps:")).select(
         F.col("subj").alias("ps_stmt"),
@@ -46,65 +50,12 @@ def build_possible_corrections(
         ps,
         (F.col("statement_id") == F.col("ps_stmt")) & (F.col("property") == F.col("ps_prop")),
     ).select("violation_id", "entity", "property", "statement_id", "constraint_id", "target_obj")
-
-    r = F.broadcast(
-        rules.select("rule_id", "constraint_id", "violation_obj", "head", "context", "support", "confidence")
+    cases = v.select(
+        "violation_id", "constraint_id", F.col("entity").alias("s"), F.col("target_obj").alias("o")
     )
-    m = v.join(
-        r,
-        (v["constraint_id"] == r["constraint_id"])
-        & (r["violation_obj"].isNull() | (r["violation_obj"] == v["target_obj"])),
-    ).drop(r["constraint_id"])
-
-    # context atoms evaluated on the snapshot with ?g dropped
-    # (`removeContext`, `CorrectionLookup.java:56-66`)
-    m = m.withColumn("atom", F.explode_outer("context"))
-    direct = snapshot.filter(~F.col("pred").contains(":")).select(
-        F.col("subj").alias("sn_subj"), F.col("pred").alias("sn_pred"), F.col("obj").alias("sn_obj")
-    )
-    val = F.when(F.col("atom.var") == "?s", F.col("entity")).otherwise(F.col("target_obj"))
-    sat = (
-        m.filter(F.col("atom").isNotNull())
-        .join(
-            direct,
-            (F.col("sn_subj") == val)
-            & (F.col("sn_pred") == F.col("atom.pred"))
-            & ((F.col("atom.obj") == "?v") | (F.col("sn_obj") == F.col("atom.obj"))),
-            "left_semi",
-        )
-        .select("violation_id", "rule_id")
-    )
-    ok = (
-        m.filter(F.col("atom").isNull())
-        .select("violation_id", "rule_id", "head", "support", "confidence")
-        .unionByName(
-            m.filter(F.col("atom").isNotNull())
-            .join(sat, ["violation_id", "rule_id"], "left_semi")
-            .select("violation_id", "rule_id", "head", "support", "confidence")
-        )
-    )
-    w = Window.partitionBy("violation_id").orderBy(
-        F.desc("confidence"), F.desc("support"), F.asc("rule_id")
-    )
-    first = ok.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    first = first.join(
-        v.select("violation_id", F.col("entity").alias("e2"), F.col("target_obj").alias("o2")),
-        "violation_id",
-    ).withColumn(
-        "predicted",
-        F.array_sort(
-            F.transform(
-                "head",
-                lambda p: F.struct(
-                    F.when(p["subj"] == "?s", F.col("e2")).when(p["subj"] == "?o", F.col("o2")).otherwise(p["subj"]).alias("subj"),
-                    p["pred"].alias("pred"),
-                    F.when(p["obj"] == "?s", F.col("e2")).when(p["obj"] == "?o", F.col("o2")).otherwise(p["obj"]).alias("obj"),
-                    p["op"].alias("op"),
-                ),
-            )
-        ),
-    )
-    return v.join(first.select("violation_id", "predicted"), "violation_id", "left")
+    direct = snapshot.filter(~F.col("pred").contains(":"))
+    fired = _first_match(cases, "violation_id", rules, direct)
+    return v.join(fired.select("violation_id", "predicted"), "violation_id", "left")
 
 
 def filter_applicable(predictions: DataFrame, snapshot: DataFrame) -> DataFrame:

@@ -8,9 +8,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from corhist_spark.edits_out import build_edits
+from corhist_spark.evaluate import apply_rules
 from corhist_spark.game import build_possible_corrections, filter_applicable, select_tiles
 from corhist_spark.mining import mine_basic_rules
-from corhist_spark.schemas import CORRECTIONS, REVISIONS
+from corhist_spark.schemas import CORRECTIONS, EDITS, REVISIONS
+from corhist_spark.state import build_state, current_state
+
+CID = "wds:P21-09D3E4D3"
+RULE_DDL = (
+    "rule_id string, constraint_id string, violation_obj string, "
+    "head array<struct<subj:string,pred:string,obj:string,op:string>>, "
+    "context array<struct<var:string,pred:string,obj:string>>, support long, confidence double"
+)
 
 
 def _rules(spark):
@@ -154,3 +163,99 @@ def test_edit_synthesis_from_game_prediction(spark):
         as_corrections, statement_nodes=statement_nodes_from_snapshot(ambiguous)
     ).collect()[0].edit
     assert edit3 is None
+
+
+def _context_rules(spark):
+    """A base rule (delete the P21 value) and a refined rule that only
+    holds when the subject has some P31 (`(?s, P31, ?v)`) and replaces
+    the value instead; the refined rule ranks first."""
+    return spark.createDataFrame(
+        [
+            ("base", CID, None, [("?s", "P21", "?o", "del")], [], 12, 0.6),
+            ("ctx", CID, None, [("?s", "P21", "?o", "del"), ("?s", "P21", "Q6581072", "add")],
+             [("?s", "P31", "?v")], 8, 0.9),
+        ],
+        RULE_DDL,
+    )
+
+
+def _predicted(row):
+    return [(s.subj, s.pred, s.obj, s.op) for s in row.predicted]
+
+
+def test_context_rule_outranks_base_through_direct_edges(spark):
+    """`CorrectionLookup.java:56-66`: with ?g dropped, a context atom is
+    looked up in the snapshot's direct edges.  Q42 has a direct P31, so
+    the refined rule wins; Q43 has P31 only through a statement node,
+    so the base rule does."""
+    snapshot, violations = _q42_world(spark)
+    snapshot = snapshot.union(
+        spark.createDataFrame(
+            [
+                ("Q42", "P31", "Q5"),
+                ("Q43", "p:P21", "Q43-error"),
+                ("Q43-error", "ps:P21", "Q360299"),
+                ("Q43", "P21", "Q360299"),
+                ("Q43", "p:P31", "Q43-s"),
+                ("Q43-s", "ps:P31", "Q5"),
+            ],
+            snapshot.schema,
+        )
+    )
+    violations = violations.union(
+        spark.createDataFrame([("v2", "Q43", "P21", "Q43-error", CID)], violations.schema)
+    )
+    preds = {
+        r.violation_id: _predicted(r)
+        for r in build_possible_corrections(_context_rules(spark), violations, snapshot).collect()
+    }
+    assert preds == {
+        "v1": [("Q42", "P21", "Q360210", "del"), ("Q42", "P21", "Q6581072", "add")],
+        "v2": [("Q43", "P21", "Q360299", "del")],
+    }
+
+
+def test_game_and_evaluator_pick_the_same_rule(spark):
+    """The game is the evaluator with ?g dropped: on the same cases,
+    build_possible_corrections over the current snapshot and
+    apply_rules at g = the current revision fire the same rules."""
+    edits = spark.createDataFrame(
+        [
+            dict(rev_id=1, op="add", subj="Q1", pred="P21", obj="Qa", obj_kind="iri"),
+            dict(rev_id=1, op="add", subj="Q1", pred="P31", obj="Q5", obj_kind="iri"),
+            dict(rev_id=2, op="add", subj="Q2", pred="P21", obj="Qb", obj_kind="iri"),
+        ],
+        schema=EDITS,
+    )
+    revs = spark.createDataFrame(
+        [
+            dict(rev_id=r, entity=e, parent_rev_id=p, author="u", based_on_rev_id=None, ts=None)
+            for r, e, p in [(1, "Q1", None), (2, "Q2", None), (3, "Q1", 2), (4, "Q2", 2)]
+        ],
+        schema=REVISIONS,
+    )
+    state = build_state(edits)
+    corr = spark.createDataFrame(
+        [
+            dict(constraint_id=CID, corr_rev=rev, target_subj=e, target_pred="P21", target_obj=o,
+                 correction=[dict(subj=e, pred="P21", obj=o, op="del")])
+            for rev, e, o in [(3, "Q1", "Qa"), (4, "Q2", "Qb")]
+        ],
+        schema=CORRECTIONS,
+    )
+    snapshot = current_state(state).select("subj", "pred", "obj").union(
+        spark.createDataFrame(
+            [("Q1", "p:P21", "Q1-s"), ("Q1-s", "ps:P21", "Qa"),
+             ("Q2", "p:P21", "Q2-s"), ("Q2-s", "ps:P21", "Qb")],
+            "subj string, pred string, obj string",
+        )
+    )
+    violations = spark.createDataFrame(
+        [("v1", "Q1", "P21", "Q1-s", CID), ("v2", "Q2", "P21", "Q2-s", CID)],
+        "violation_id string, entity string, property string, statement_id string, constraint_id string",
+    )
+    rules = _context_rules(spark)
+    applied = {r.target_subj: r for r in apply_rules(rules, corr, revs, state).collect()}
+    assert {e: r.rule_id for e, r in applied.items()} == {"Q1": "ctx", "Q2": "base"}
+    game = {r.entity: _predicted(r) for r in build_possible_corrections(rules, violations, snapshot).collect()}
+    assert game == {e: _predicted(r) for e, r in applied.items()}

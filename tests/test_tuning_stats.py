@@ -6,9 +6,10 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from corhist_spark.evaluate import aggregate_stats, apply_rules, evaluation_metrics, tune
+from corhist_spark.evaluate import SPLIT_THRESHOLD, aggregate_stats, apply_rules, evaluation_metrics, tune
 from corhist_spark.mining import mine
 from corhist_spark.state import build_state
+from tests.test_game import RULE_DDL
 from tests.test_mining import _mk
 
 
@@ -53,6 +54,60 @@ def test_tune_mines_on_train_split(spark):
     total = corr.count()
     assert total == 150 and 0 < seen["n"] < 0.35 * total  # small split mined
     assert tuned.count() > 0  # rules came from the callback
+
+
+def _threshold_rules(spark):
+    """Rules for `_mk(spark, 18, 12)` (rows Q0..Q17 fixed by deleting
+    (Qi, P1, Vi), Q18..Q29 by an addition): an always-wrong base rule
+    at 0.55, ten 0.9 rules on V0..V9 predicting the right deletion and
+    ten 0.7 deletion rules on V10..V14 (right) and V18..V22 (wrong)."""
+    delete = [("?s", "P1", "?o", "del")]
+    rows = [("base", "c1", None, [("?s", "P2", "?o", "del")], [], 30, 0.55)]
+    rows += [(f"hi{i}", "c1", f"V{i}", delete, [], 10, 0.9) for i in range(10)]
+    rows += [(f"mid{i}", "c1", f"V{i}", delete, [], 10, 0.7) for i in [*range(10, 15), *range(18, 23)]]
+    return spark.createDataFrame(rows, RULE_DDL)
+
+
+def test_tune_threshold_drops_a_rule(spark):
+    """Unfiltered: found 30, good 15 (F1 0.667).  At 0.6 the base rule
+    goes: found 20, good 15 (F1 0.706), the maximum; 0.65 and 0.7 tie
+    it and the first maximum is kept.  tune must equal the
+    reference's loop — one apply_rules + evaluation_metrics per
+    threshold — spelled out here."""
+    corr, revs, edits = _mk(spark, n_del=18, n_add=12, with_mark=True)
+    state = build_state(edits).localCheckpoint()
+    rules = _threshold_rules(spark)
+
+    def f1_of(rs):
+        return evaluation_metrics(apply_rules(rs, corr, revs, state)).collect()[0].f1
+
+    best, best_f1 = rules, f1_of(rules)
+    for thr in [0.55, 0.6, 0.65, 0.7, 0.75, 0.8, 0.85, 0.9, 0.95, 1.0]:
+        cand = rules.filter(F.col("confidence") >= thr)
+        f1 = f1_of(cand)
+        if f1 > best_f1:
+            best, best_f1 = cand, f1
+    want = sorted(r.rule_id for r in best.collect())
+    assert len(want) == 20 and "base" not in want
+    assert sorted(r.rule_id for r in tune(rules, corr, revs, state).collect()) == want
+
+
+def test_tune_and_apply_rules_release_their_caches(spark):
+    """Neither call may leave a persisted RDD behind (a streaming
+    caller applies rules once per micro-batch).  Compared as sets of
+    RDD ids: the session's count also drops when the JVM collects
+    other tests' frames.  The fixture size is unique to this test so
+    no earlier test has cached an identical plan."""
+    corr, revs, edits = _mk(spark, n_del=91, n_add=61, with_mark=True)
+    assert corr.count() > SPLIT_THRESHOLD  # tune splits off a CV set
+    state = build_state(edits).localCheckpoint()
+    rules = mine(corr, revs, state).localCheckpoint()
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    before = persisted()
+    apply_rules(rules, corr, revs, state).collect()
+    assert persisted() - before == set()
+    tune(rules, corr, revs, state, seed=5).collect()
+    assert persisted() - before == set()
 
 
 def test_aggregate_stats_weighted_vs_unweighted(spark):
