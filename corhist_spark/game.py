@@ -9,8 +9,8 @@ Transcribes:
   edge; first matching rule by (confidence, support) rank wins.
 - `game/ApplicableEditChecker.java:37-94`: an edit is applicable iff
   its removed claim still exists and its created claim is not already
-  present — expressed as semi/anti joins against the snapshot instead
-  of live API calls.
+  present — one left join of the predicted statements against the
+  snapshot's direct edges instead of live API calls.
 - `game/ConstraintCorrectionsGame.java:49-66`: fetch 2x the requested
   tiles in random order (seeded here), filter applicability, limit.
 
@@ -61,32 +61,36 @@ def build_possible_corrections(
 def filter_applicable(predictions: DataFrame, snapshot: DataFrame) -> DataFrame:
     """`ApplicableEditChecker` as set logic: every del-statement must
     exist in the snapshot's direct edges, every add-statement must
-    not."""
-    direct = snapshot.filter(~F.col("pred").contains(":")).select(
-        F.col("subj").alias("sn_subj"), F.col("pred").alias("sn_pred"), F.col("obj").alias("sn_obj")
+    not.  Rows with no predicted statement are dropped.
+
+    One lookup: each row is keyed, its statements are exploded and
+    left-joined to the direct edges, and the verdict is aggregated per
+    key with the row carried along, so ``predictions`` is evaluated
+    once.  On a single-partition input (a sample) with a broadcast
+    lookup nothing is shuffled and the rows keep their order."""
+    row = ", ".join(f"`{c}`" for c in predictions.columns)
+    direct = snapshot.where("NOT contains(pred, ':')").select("subj", "pred", "obj")
+    # the key is drawn before the explode, so it names the input row
+    stmts = predictions.selectExpr(
+        f"struct({row}) AS _row", "monotonically_increasing_id() AS _key"
+    ).selectExpr("_row", "_key", "explode(_row.predicted) AS _stmt")
+    return (
+        stmts.join(
+            direct,
+            F.expr("_stmt.subj = subj AND _stmt.pred = pred AND _stmt.obj = obj"),
+            "left",
+        )
+        .groupBy("_key")
+        .agg(
+            F.expr("first(_row) AS _row"),
+            F.expr(
+                "min(CASE WHEN _stmt.op = 'del' THEN subj IS NOT NULL ELSE subj IS NULL END) AS _ok"
+            ),
+        )
+        .where("_ok")
+        .sortWithinPartitions("_key")
+        .selectExpr("_row.*")
     )
-    ex = predictions.filter(F.col("predicted").isNotNull()).select(
-        "violation_id", F.explode("predicted").alias("stmt")
-    )
-    ex = ex.join(
-        direct,
-        (F.col("stmt.subj") == F.col("sn_subj"))
-        & (F.col("stmt.pred") == F.col("sn_pred"))
-        & (F.col("stmt.obj") == F.col("sn_obj")),
-        "left",
-    ).withColumn(
-        "ok",
-        F.when(F.col("stmt.op") == "del", F.col("sn_subj").isNotNull()).otherwise(
-            F.col("sn_subj").isNull()
-        ),
-    )
-    ok_ids = (
-        ex.groupBy("violation_id")
-        .agg(F.min(F.col("ok").cast("int")).alias("all_ok"))
-        .filter(F.col("all_ok") == 1)
-        .select("violation_id")
-    )
-    return predictions.join(ok_ids, "violation_id", "left_semi")
 
 
 def queue_stats(log: DataFrame) -> DataFrame:
@@ -129,8 +133,17 @@ def select_tiles(
 ) -> DataFrame:
     """`ConstraintCorrectionsGame.java:49-66`: fetch 2x count tiles in
     random order BEFORE the applicability check (the oversample exists
-    because the filter discards tiles), then filter and take count;
-    cap 30/request (`game/Main.java:49`)."""
+    because the filter discards tiles), then filter and take the first
+    count in that order; cap 30/request (`game/Main.java:49`).
+
+    The sample is drawn once, on one partition, with its ``rand(seed)``
+    value; ``filter_applicable`` checks it there, so a warm read over a
+    materialized queue adds no shuffle of its own."""
     count = min(count, 30)
-    sample = predictions.filter(F.col("predicted").isNotNull()).orderBy(F.rand(seed)).limit(2 * count)
-    return filter_applicable(sample, snapshot).limit(count)
+    sample = (
+        predictions.where("predicted IS NOT NULL")
+        .select("*", F.rand(seed).alias("_rand"))
+        .orderBy("_rand")
+        .limit(2 * count)
+    )
+    return filter_applicable(sample, snapshot).orderBy("_rand").limit(count).drop("_rand")

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from corhist_spark.edits_out import build_edits
+from corhist_spark.edits_out import build_edits, statement_nodes_from_snapshot
 from corhist_spark.evaluate import apply_rules
 from corhist_spark.game import build_possible_corrections, filter_applicable, select_tiles
 from corhist_spark.mining import mine_basic_rules
@@ -101,12 +101,9 @@ def test_applicability_and_tiles(spark):
     assert len(tiles) == 1
 
 
-def test_oversample_before_applicability_filter(spark):
-    """`ConstraintCorrectionsGame.java:52-66` order: the 2x random
-    fetch happens BEFORE the applicability check — with 4 of 10 queued
-    tiles inapplicable, a request for 4 still fills all 4 (the 2x=8
-    sample always contains >= 4 applicable ones)."""
-    rules = _rules(spark)
+def _oversample_world(spark):
+    """10 queued P21 deletions; only the first 6 claims are still in
+    the snapshot's direct edges."""
     snap_rows, viol_rows = [], []
     for i in range(10):
         e, stmt, val = f"Q{100 + i}", f"Q{100 + i}-s", f"Q{9000 + i}"
@@ -119,11 +116,94 @@ def test_oversample_before_applicability_filter(spark):
         viol_rows,
         "violation_id string, entity string, property string, statement_id string, constraint_id string",
     )
-    preds = build_possible_corrections(rules, violations, snapshot)
+    return build_possible_corrections(_rules(spark), violations, snapshot), snapshot
+
+
+def test_oversample_before_applicability_filter(spark):
+    """`ConstraintCorrectionsGame.java:52-66` order: the 2x random
+    fetch happens BEFORE the applicability check — with 4 of 10 queued
+    tiles inapplicable, a request for 4 still fills all 4 (the 2x=8
+    sample always contains >= 4 applicable ones)."""
+    preds, snapshot = _oversample_world(spark)
     tiles = select_tiles(preds, snapshot, count=4).collect()
     assert len(tiles) == 4
     applicable_ids = {f"v{i}" for i in range(6)}
     assert {t.violation_id for t in tiles} <= applicable_ids
+
+
+def test_select_tiles_matches_a_recount(spark):
+    """Per seed, the tiles are the 2x count rows drawn in rand(seed)
+    order, filtered in Python against the direct edges, first count
+    kept, in that order."""
+    preds, snapshot = _oversample_world(spark)
+    preds = preds.localCheckpoint()
+    direct = {(r.subj, r.pred, r.obj) for r in snapshot.collect() if ":" not in r.pred}
+    for seed in (1, 7, 42, 99, 2024):
+        for count in (2, 3, 4):
+            drawn = (
+                preds.filter(F.col("predicted").isNotNull())
+                .orderBy(F.rand(seed))
+                .limit(2 * count)
+                .collect()
+            )
+            expected = [
+                r for r in drawn
+                if all(((s.subj, s.pred, s.obj) in direct) == (s.op == "del") for s in r.predicted)
+            ][:count]
+            assert select_tiles(preds, snapshot, count=count, seed=seed).collect() == expected
+
+
+def test_filter_applicable_judges_whole_rows(spark):
+    """A row is kept only when ALL its statements pass; rows without
+    statements are dropped; duplicate rows are both kept."""
+    snapshot = spark.createDataFrame(
+        [("Q1", "P21", "Qa"), ("Q1", "P31", "Q5")], "subj string, pred string, obj string"
+    )
+    d, a = ("Q1", "P21", "Qa", "del"), ("Q1", "P21", "Qb", "add")
+    rows = [
+        ("ok-del", [d]),
+        ("ok-replace", [d, a]),
+        ("add-present", [d, ("Q1", "P31", "Q5", "add")]),
+        ("del-absent", [("Q1", "P21", "Qz", "del")]),
+        ("empty", []),
+        ("null", None),
+        ("ok-del", [d]),
+    ]
+    preds = spark.createDataFrame(
+        rows, "violation_id string, predicted array<struct<subj:string,pred:string,obj:string,op:string>>"
+    )
+    got = sorted(r.violation_id for r in filter_applicable(preds, snapshot).collect())
+    assert got == ["ok-del", "ok-del", "ok-replace"]
+
+
+def test_warm_tile_read_runs_three_jobs(spark, tmp_path):
+    """A warm read over a stored queue and snapshot and a materialized
+    node table (the game's steady state): select_tiles + build_edits +
+    collect runs at most 3 Spark jobs (two lookups and the result)."""
+    preds, snapshot = _oversample_world(spark)
+    preds.write.parquet(str(tmp_path / "queue"))
+    snapshot.write.parquet(str(tmp_path / "snapshot"))
+    preds = spark.read.parquet(str(tmp_path / "queue"))
+    snapshot = spark.read.parquet(str(tmp_path / "snapshot"))
+    nodes = statement_nodes_from_snapshot(snapshot).localCheckpoint()
+    sc = spark.sparkContext
+
+    def read(seed):
+        tiles = select_tiles(preds, snapshot, count=4, seed=seed)
+        as_corr = tiles.select(
+            "violation_id", F.col("entity").alias("target_subj"), F.col("predicted").alias("correction")
+        )
+        return build_edits(as_corr, nodes).collect()
+
+    read(1)
+    try:
+        sc.setJobGroup("warm-tile-read", "warm tile read")
+        rows = read(2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 4 and all(r.edit.action == "wbremoveclaims" for r in rows)
+    assert len(sc.statusTracker().getJobIdsForGroup("warm-tile-read")) <= 3
 
 
 def test_edit_synthesis_from_game_prediction(spark):
@@ -144,8 +224,6 @@ def test_edit_synthesis_from_game_prediction(spark):
 
     # with the statement-node snapshot, the REAL GUID is resolved via
     # the p:/ps: walk with '-' -> '$' munging (WikidataEditBuilder:134-142)
-    from corhist_spark.edits_out import statement_nodes_from_snapshot
-
     nodes = statement_nodes_from_snapshot(snapshot)
     edit2 = build_edits(as_corrections, statement_nodes=nodes).collect()[0].edit
     assert edit2.action == "wbremoveclaims"
