@@ -35,10 +35,6 @@ HEADLINE = [
     "state_intervals",
     "current_state",
     "inverse_violations",
-    "pricing_summary",
-    "shipping_priority",
-    "top_orders_per_customer",
-    "sessionize",
     "exact_dedup",
     "token_stats",
     "doc_fingerprint",
@@ -53,11 +49,9 @@ HEADLINE = [
     "corpus_profile",
     "token_cardinality",
     "mention_extraction",
-    # r4: BPE segmentation (fixed 4-merge table as ONE nested
-    # higher-order aggregate — constant plan depth) and the streaming
-    # batch-equivalence window aggregation (bounded file stream run to
-    # completion; time includes stream startup/commit overhead)
-    "bpe_segments",
+    # r4: the streaming batch-equivalence window aggregation (bounded
+    # file stream run to completion; time includes stream
+    # startup/commit overhead)
     "streaming_windowed_counts",
     "pii_stats",
     "winnow_fingerprints",
@@ -103,28 +97,20 @@ HEADLINE = [
     "cc_components",
     "subclass_closure",
     # late r5: KG graph-shape analytics over the derived entity graph
-    # (degree-oriented triangles, 8-iteration PageRank) and the
-    # constant-size mergeable profiling sketches (count-min heavy
-    # hitters, deterministic HLL distinct)
+    # (degree-oriented triangles, 8-iteration PageRank)
     "triangle_counts",
     "pagerank",
-    "cms_heavy_hitters",
-    "hll_shingles",
-    # late r5 batch 2: deterministic community detection, predicate
-    # co-occurrence PMI over the derived current state, and BM25
-    # keyword-profile selection
+    # late r5 batch 2: deterministic community detection and predicate
+    # co-occurrence PMI over the derived current state
     "label_propagation",
     "predicate_pmi",
-    "bm25_select",
     # deterministic DeepWalk-style walk corpus (graph-embedding input)
     "random_walks",
     # late r5 batch 3: dense-backbone extraction (6-round 3-core peel),
-    # bounded multi-source BFS reachability (4 hops from a ~2.4%
-    # deterministic seed sample), and the fixed-bin histogram-quantile
-    # sketch over per-document token counts
+    # and bounded multi-source BFS reachability (4 hops from a ~2.4%
+    # deterministic seed sample)
     "k_core",
     "bfs_distances",
-    "token_quantiles",
     # fixed-8-round HITS hubs/authorities (L1-normalized)
     "hits",
     # watermarked streaming dedup: four mtime-ordered micro-batches
@@ -139,8 +125,6 @@ HEADLINE = [
     # structural entity similarity (neighbor-set jaccard, stop-node
     # removal first — explicit hub-skew control)
     "neighbor_jaccard",
-    # Bloom-filter semi-join vs exact (16k-word broadcast bitmap)
-    "bloom_semi_join",
     # CDC-style snapshot diff (churn-sized output)
     "snapshot_delta",
     # per-doc n-gram originality score
@@ -150,15 +134,13 @@ HEADLINE = [
     # r5 batch 5: knowledge fusion + KG-quality profiling (6-round
     # Sums truth discovery over multi-source claims, per-predicate
     # functionality, contested-fact stability, filtered KGE negative
-    # sampling via bucketed hash draws), Adamic-Adar link prediction
-    # (hub-capped wedges, non-adjacent pairs) and the integer-exact
-    # KMV distinct sketch
+    # sampling via bucketed hash draws) and Adamic-Adar link prediction
+    # (hub-capped wedges, non-adjacent pairs)
     "truth_discovery",
     "predicate_functionality",
     "fact_stability",
     "kge_negatives",
     "adamic_adar",
-    "kmv_shingles",
     # r5 batch 6: KG -> training-data bridges + evaluation (entity
     # summarization, KELM-style linearization, link-prediction recall
     # harness over a hash holdout, one-row graph shape profile with
@@ -194,10 +176,9 @@ HEADLINE = [
     "span_corruption",
     "ccnet_buckets",
     # batch 12: normalized (fuzzy-exact) dedup, fastText-shaped
-    # classifier inference, KMV cross-source overlap matrix
+    # classifier inference
     "normalized_dedup",
     "quality_classifier",
-    "kmv_source_overlap",
     # batch 13: ER blocking scorecard (LSH blocker vs exact sampled
     # ground truth), SDType domain/range ontology induction
     "blocking_quality",
@@ -283,8 +264,7 @@ HEADLINE = [
     # batch 34: signal redundancy audit, FIM transform
     "signal_correlations",
     "fim_pairs",
-    # batch 35: session trajectories, packing efficiency
-    "user_sessions",
+    # batch 35: packing efficiency
     "packing_efficiency",
     # batch 36: embedding-quality audits
     "embedding_outliers",
@@ -310,15 +290,10 @@ HEADLINE = [
     # batch 43: directed triad census, SDType inference eval
     "triad_census",
     "sdtype_assign",
-    # batch 44: blocklist filter, FD discovery
+    # batch 44: blocklist filter
     "blocklist_filter",
-    "fd_mining",
-    # batch 45: funnel conversion, retention cohorts
-    "funnel_rates",
-    "retention_cohorts",
-    # batch 46: preference pairs, trajectory patterns
+    # batch 46: preference pairs
     "preference_pairs",
-    "trajectory_patterns",
     # batch 47: correction SFT pairs, predicate value drift
     "edit_instruction_pairs",
     "predicate_value_drift",
@@ -328,8 +303,7 @@ HEADLINE = [
     # batch 49: edit-distance dedup verify, vocab coverage curve
     "edit_distance_verify",
     "vocab_coverage",
-    # batch 50: inclusion-dependency discovery, LSH dedup recall audit
-    "inclusion_deps",
+    # batch 50: LSH dedup recall audit
     "lsh_recall",
     # batch 51: DoReMi-step domain weights, output-shard manifest
     "doremi_weights",
@@ -337,18 +311,16 @@ HEADLINE = [
     # batch 52: AMIE PCA-confidence rules, Kneser-Ney continuation
     "amie_implications",
     "kn_continuation",
-    # batch 53: int8 quantization audit, unique-key discovery
+    # batch 53: int8 quantization audit
     "embedding_quantization",
-    "key_discovery",
     # batch 54: community modularity, split-conformal thresholds
     "community_modularity",
     "conformal_thresholds",
     # batch 55: robust source stats, Hill tail index
     "robust_source_stats",
     "hill_tail_index",
-    # batch 56: LSH band-parameter sweep, nDCG retrieval eval
+    # batch 56: LSH band-parameter sweep
     "lsh_band_tuning",
-    "ndcg_eval",
     # batch 57: PRA path features, loss-masked SFT packing
     "pra_path_features",
     "sft_pack_masks",
@@ -370,8 +342,7 @@ HEADLINE = [
     # batch 63: Poisson bootstrap, Borda rank aggregation
     "poisson_bootstrap",
     "borda_quality_rank",
-    # batch 64: two-stage retrieval re-rank, CV fold audit
-    "rerank_eval",
+    # batch 64: CV fold audit
     "cv_fold_audit",
     # r5 batch 65: Pareto-skyline curation (value-histogram frontier)
     # and the Benford first-digit source monitor
@@ -441,18 +412,12 @@ HEADLINE = [
     # learned-index epsilon audit
     "seasonal_profile",
     "learned_index_audit",
-    # r5 batch 82: histogram selectivity q-error audit and
-    # reciprocal-rank fusion at K
+    # r5 batch 82: histogram selectivity q-error audit
     "selectivity_audit",
-    "rrf_fusion",
     # r5 batch 83: binary media byte-signature dedup and per-source
     # quantile normalization
     "media_phash",
     "quantile_normalize",
-    # r5 batch 84: TPC-H Q5/Q10 join shapes (local supplier volume,
-    # returned-item report)
-    "local_supplier_volume",
-    "returned_item_report",
     # r5 batch 85: denial-constraint DQ audit and CUBE/grouping_id
     "denial_constraints",
     "cube_profile",
@@ -552,20 +517,16 @@ def main() -> None:
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     # SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the run (used by the sf1
     # heavy-path tier, tools/bench_sf1.sh).  Names resolve against the
-    # FULL registry — not just HEADLINE — and unknown names are an
-    # error, not a silent drop (a typo'd list would otherwise read as
-    # "measured everything").
+    # FULL registry — not just HEADLINE — and an unknown name, from
+    # either list, is an error, not a silent drop (a stale or typo'd
+    # list would otherwise read as "measured everything").
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        headline = [q.strip() for q in only.split(",") if q.strip()]
-        unknown = [q for q in headline if q not in qs]
-        if unknown:
-            raise SystemExit(f"SPARK_GRAFT_BENCH_ONLY names not in queries(): {unknown}")
-    else:
-        headline = HEADLINE
+    headline = [q.strip() for q in only.split(",") if q.strip()] if only else HEADLINE
+    unknown = [q for q in headline if q not in qs]
+    if unknown:
+        source = "SPARK_GRAFT_BENCH_ONLY" if only else "HEADLINE"
+        raise SystemExit(f"{source} names not in queries(): {unknown}")
     for name in headline:
-        if name not in qs:
-            continue
         # min-of-N: host noise on this box is large (hypervisor CPU
         # steal); the minimum is the stable engine-cost estimate
         best = float("inf")

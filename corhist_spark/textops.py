@@ -3500,7 +3500,7 @@ def band_capture_ppm_sql(s_ppm_col: str, r: int, b: int) -> str:
     drift)."""
     # explicit DOUBLE casts everywhere: Spark parses a bare 1.0 / 1e6
     # literal as DECIMAL inside F.expr and would run the whole chain
-    # in decimal arithmetic (the _BM25_SQL convention)
+    # in decimal arithmetic
     one = "CAST(1 AS DOUBLE)"
     s = f"(CAST({s_ppm_col} AS DOUBLE) / CAST(1000000 AS DOUBLE))"
     miss = _pow2_chain(f"({one} - {_pow2_chain(s, r)})", b)

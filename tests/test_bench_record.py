@@ -85,3 +85,19 @@ def test_sf1_summary_stays_driver_capturable():
         d = json.load(fh)
     assert "queries" not in d  # per-query detail lives in BENCH_SF1_DETAIL.json
     assert os.path.exists(os.path.join(REPO, "BENCH_SF1_DETAIL.json"))
+
+
+def test_bench_names_are_registered_queries():
+    """Every HEADLINE name and every name in tools/bench_sf1.sh's
+    SPARK_GRAFT_BENCH_ONLY list must be a queries() key: bench.py
+    stops on a stale name."""
+    import re
+
+    bench = _load_bench()
+    qs = bench.entry_mod.queries()
+    with open(os.path.join(REPO, "tools", "bench_sf1.sh")) as fh:
+        only = re.search(r'SPARK_GRAFT_BENCH_ONLY="([^"]*)"', fh.read()).group(1)
+    sf1_names = [q for q in only.split(",") if q]
+    assert sf1_names
+    assert [q for q in bench.HEADLINE if q not in qs] == []
+    assert [q for q in sf1_names if q not in qs] == []

@@ -1,7 +1,6 @@
 """Unit tests for the knowledge-fusion / KG-quality family
 (predicate functionality, fact stability, truth discovery, KGE
-negative sampling) plus Adamic-Adar link prediction and the KMV
-distinct sketch — algorithm pins on hand-checked fixtures and
+negative sampling) plus Adamic-Adar link prediction — algorithm pins on hand-checked fixtures and
 pure-Python reference implementations; the cross-engine DuckDB rows
 live in test_entry_oracle.py."""
 
@@ -19,7 +18,6 @@ from corhist_spark.fusion import (
     truth_discovery,
 )
 from corhist_spark.graph import adamic_adar
-from corhist_spark.sketches import kmv_distinct_shingles
 
 
 def _cur(spark, rows):
@@ -207,36 +205,6 @@ def test_adamic_adar_excludes_existing_edges_and_hubs(spark):
     assert adamic_adar(star, hub_cap=2, min_common=1).count() == 0
 
 
-# ---- KMV distinct sketch ----
-
-
-def test_kmv_exact_below_k_and_estimate_above_k(spark):
-    # 30 distinct 16-char shingles < k: k_used = n_distinct and the
-    # sketch answers EXACTLY
-    docs = spark.createDataFrame(
-        [(i, f"shingle-{i:07d}-pad") for i in range(30)],
-        "doc_id long, text string",
-    )
-    row = kmv_distinct_shingles(docs, k=256).collect()[0]
-    n_shingles = len(
-        {t[i : i + 16] for _, t in docs.collect() for i in range(max(len(t) - 15, 1))}
-    )
-    assert row["k_used"] == n_shingles
-    assert row["est_distinct"] == n_shingles
-    # ~4000 distinct shingles >> k=256: estimate within the sketch's
-    # ~3-sigma band (stderr ~ 1/sqrt(k) ~ 6%)
-    big = spark.createDataFrame(
-        [(i, f"u{i:05d}" + "q" * 12) for i in range(4000)],
-        "doc_id long, text string",
-    )
-    row = kmv_distinct_shingles(big, k=256).collect()[0]
-    truth = len(
-        {t[i : i + 16] for _, t in big.collect() for i in range(max(len(t) - 15, 1))}
-    )
-    assert row["k_used"] == 256
-    assert abs(row["est_distinct"] - truth) <= 0.25 * truth
-
-
 # ---- plan guards (the 100-TB shape) ----
 
 
@@ -253,14 +221,12 @@ def test_fusion_plans_stay_jvm_side(spark):
         "source string, subj string, pred string, obj string",
     )
     e = _edges(spark, [("a", "c"), ("b", "c"), ("a", "d"), ("b", "d")])
-    docs = spark.createDataFrame([(1, "abcdefghijklmnopqr")], "doc_id long, text string")
     for df in (
         predicate_functionality(cur),
         fact_stability(state, 1 << 62),
         truth_discovery(claims, n_iters=2),
         kge_negatives(cur),
         adamic_adar(e, min_common=1),
-        kmv_distinct_shingles(docs),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan  # no row-at-a-time Python

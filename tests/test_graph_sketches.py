@@ -1,8 +1,7 @@
-"""Unit tests for the KG graph-analytics (triangles, PageRank, label
-propagation, predicate PMI), sketch-profiling (count-min, HLL) and
-retrieval (BM25) operators, against hand-checked fixtures and exact
-pure-Python reference implementations — the cross-engine DuckDB rows
-live in test_entry_oracle.py; these pin the ALGORITHMS on
+"""Unit tests for the KG graph-analytics operators (triangles, PageRank,
+label propagation, predicate PMI, k-core, BFS, HITS, ...), against
+hand-checked fixtures and exact pure-Python reference implementations
+— the cross-engine DuckDB rows live in test_entry_oracle.py; these pin the ALGORITHMS on
 graphs/streams small enough to verify by hand."""
 
 from __future__ import annotations
@@ -14,16 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from corhist_spark.graph import pagerank, triangle_counts
-from corhist_spark.sketches import (
-    CMS_DEPTH,
-    CMS_WIDTH,
-    HLL_ALPHA,
-    HLL_BUCKETS,
-    cms_build,
-    cms_heavy_hitters,
-    hll_estimate,
-    hll_registers,
-)
 
 
 def _edges(spark, pairs):
@@ -272,150 +261,12 @@ def test_predicate_pmi_hand_checked(spark):
     assert r["pmi"] == pytest.approx(round(math.log(8 / 6), 6), abs=1e-9)
 
 
-# ---- BM25 ----
-
-
-def test_bm25_vs_python(spark):
-    from corhist_spark.retrieval import BM25_B, BM25_K1, bm25_scores
-
-    texts = {
-        0: "join join vector table scan",
-        1: "join table table scan scan filter",
-        2: "vector vector vector pad pad pad pad pad",
-        3: "table scan filter group sort",  # no query terms -> absent
-    }
-    q = ["join", "vector"]
-    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    got = {r["doc_id"]: r["bm25"] for r in bm25_scores(docs, q).collect()}
-
-    toks = {d: t.split() for d, t in texts.items()}
-    n, avgdl = len(toks), sum(map(len, toks.values())) / len(toks)
-    want = {}
-    for d, ts in toks.items():
-        s = 0.0
-        for t in set(q) & set(ts):
-            df = sum(1 for ts2 in toks.values() if t in ts2)
-            idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            tf = ts.count(t)
-            s += idf * (tf * (BM25_K1 + 1.0)) / (
-                tf + BM25_K1 * (1.0 - BM25_B + BM25_B * len(ts) / avgdl)
-            )
-        if s:
-            want[d] = round(s, 6)
-    assert got.keys() == want.keys()
-    for d in want:
-        assert got[d] == pytest.approx(want[d], abs=2e-6), d
-    # doc 0 matches both terms; doc 1 matches one and is longer
-    assert got[0] > got[1]
-
-
-# ---- count-min ----
-
-
-def test_cms_estimate_upper_bounds_truth_and_finds_heavy(spark):
-    # 'the' at ~33%, 'of' at ~17%, long uniform tail: both heavies
-    # must surface; every CM estimate >= the true count (the sketch's
-    # one-sided guarantee), and est <= truth + N/width per row bound
-    # is loose enough that on this tiny stream est == truth for the
-    # heavies with overwhelming probability, so pin the ppm filter
-    # end-to-end instead of the estimates.
-    docs = spark.createDataFrame(
-        [(i, " ".join(["the", "the", "of", f"w{i}", f"u{i % 97}", "the"]))
-         for i in range(200)],
-        "doc_id long, text string",
-    )
-    hh = {r["token"]: r["est_count"] for r in cms_heavy_hitters(docs).collect()}
-    assert "the" in hh and "of" in hh
-    true_the, true_of = 600, 200
-    assert hh["the"] >= true_the and hh["of"] >= true_of
-    # no singleton from the tail can pass the 500-ppm bar (1200 total
-    # stream = bar at >= 1 ... so singletons CAN pass only if their
-    # estimate collides up to >= 0.6; assert the heavies dominate)
-    assert hh["the"] == max(hh.values())
-
-
-def test_cms_sketch_size_is_bounded(spark):
-    docs = spark.createDataFrame(
-        [(i, f"a b c d e f g h w{i}") for i in range(500)],
-        "doc_id long, text string",
-    )
-    from corhist_spark.sketches import doc_tokens
-
-    sk = cms_build(doc_tokens(docs))
-    assert sk.count() <= CMS_DEPTH * CMS_WIDTH  # constant-size summary
-
-
-# ---- HLL ----
-
-
-def _hll_python(values):
-    regs: dict[int, int] = {}
-    for v in values:
-        h = hashlib.md5(v.encode()).hexdigest()
-        bucket = int(h[:2], 16)
-        tail = h[2:15]
-        bits = bin(int(tail, 16))[2:].zfill(52)
-        rho = 53 if int(tail, 16) == 0 else bits.index("1") + 1
-        regs[bucket] = max(regs.get(bucket, 0), rho)
-    m = HLL_BUCKETS
-    s = sum(2.0 ** -r for r in regs.values()) + (m - len(regs))
-    zeros = m - len(regs)
-    raw = HLL_ALPHA * m * m / s
-    if raw <= 2.5 * m and zeros > 0:
-        est = float(m) * math.log(float(m) / zeros)
-    else:
-        est = raw
-    return int(round(est)), zeros
-
-
-def test_hll_registers_match_bit_reference(spark):
-    # the string/CASE rho must equal the true leading-zero count of
-    # the 52-bit tail for every value — compare register tables
-    vals = [f"v{i}" for i in range(3000)]
-    df = spark.createDataFrame([(v,) for v in vals], "s string")
-    got = {r["bucket"]: r["reg"] for r in hll_registers(df).collect()}
-    want: dict[int, int] = {}
-    for v in vals:
-        h = hashlib.md5(v.encode()).hexdigest()
-        b, tail = int(h[:2], 16), h[2:15]
-        bits = bin(int(tail, 16))[2:].zfill(52)
-        rho = 53 if int(tail, 16) == 0 else bits.index("1") + 1
-        want[b] = max(want.get(b, 0), rho)
-    assert got == want
-
-
-def test_hll_estimate_matches_python_and_is_accurate(spark):
-    vals = [f"item-{i}" for i in range(5000)]
-    df = spark.createDataFrame([(v,) for v in vals], "s string")
-    row = hll_estimate(hll_registers(df)).first()
-    want_est, want_zeros = _hll_python(vals)
-    assert row["zero_registers"] == want_zeros
-    assert row["hll_estimate"] == want_est
-    # 256 buckets -> sigma ~6.5%; 3 sigma = 20%
-    assert abs(row["hll_estimate"] - 5000) / 5000 < 0.20
-
-
-def test_hll_small_range_linear_counting(spark):
-    # 20 distinct values -> most registers zero -> the linear-counting
-    # branch fires and is near-exact
-    vals = [f"x{i}" for i in range(20)]
-    df = spark.createDataFrame([(v,) for v in vals * 5], "s string")
-    row = hll_estimate(hll_registers(df)).first()
-    want_est, want_zeros = _hll_python(vals)
-    assert (row["hll_estimate"], row["zero_registers"]) == (want_est, want_zeros)
-    assert abs(row["hll_estimate"] - 20) <= 2
-
-
 # ---- plan guards (the 100-TB shape) ----
 
 
 def test_graph_and_sketch_plans_stay_jvm_side(spark):
     from corhist_spark.graph import label_propagation, predicate_pmi
-    from corhist_spark.retrieval import bm25_scores
 
-    docs = spark.createDataFrame(
-        [(i, "a b c " + f"w{i}") for i in range(50)], "doc_id long, text string"
-    )
     state = spark.createDataFrame(
         [("s1", "P1", "v"), ("s1", "P2", "v")], "subj string, pred string, obj string"
     )
@@ -428,9 +279,6 @@ def test_graph_and_sketch_plans_stay_jvm_side(spark):
         label_propagation(edges, n_iters=2),
         random_walks(edges, n_steps=2),
         predicate_pmi(state),
-        bm25_scores(docs, ["a", "b"]),
-        cms_heavy_hitters(docs),
-        hll_registers(docs.select(F.col("text").alias("s"))),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan  # no row-at-a-time Python
@@ -557,70 +405,14 @@ def test_bfs_distances_random_vs_python(spark):
     assert got == _bfs_python(pairs, seed_nodes)
 
 
-# ---- binned quantiles ----
-
-
-def test_binned_quantiles_hand_checked(spark):
-    from corhist_spark.sketches import binned_quantiles
-
-    # uniform 1..100, width 8: bin b holds 8b..8b+7 so cum(bin b) =
-    # min(8b+7, 100); first bins covering 50/90/99% are 6/11/12
-    df = spark.createDataFrame([(v,) for v in range(1, 101)], "v int")
-    got = {
-        r["q"]: (r["bin_lo"], r["bin_hi"], r["cum_count"], r["total_count"])
-        for r in binned_quantiles(df).collect()
-    }
-    assert got == {
-        50: (48, 55, 55, 100),
-        90: (88, 95, 95, 100),
-        99: (96, 103, 100, 100),
-    }
-
-
-def test_binned_quantiles_vs_python(spark):
-    from corhist_spark.sketches import QUANT_BIN_WIDTH, binned_quantiles
-
-    vals = [int(hashlib.md5(str(i).encode()).hexdigest()[:4], 16) % 400 for i in range(1000)]
-    df = spark.createDataFrame([(v,) for v in vals], "v int")
-    got = {r["q"]: (r["bin_lo"], r["cum_count"]) for r in binned_quantiles(df).collect()}
-    hist: dict[int, int] = {}
-    for v in vals:
-        hist[v // QUANT_BIN_WIDTH] = hist.get(v // QUANT_BIN_WIDTH, 0) + 1
-    want = {}
-    for q in (50, 90, 99):
-        cum = 0
-        for b in sorted(hist):
-            cum += hist[b]
-            if cum * 100 >= len(vals) * q:
-                want[q] = (b * QUANT_BIN_WIDTH, cum)
-                break
-    assert got == want
-
-
-def test_token_count_quantiles_counts_tokens_like_the_repo(spark):
-    from corhist_spark.sketches import token_count_quantiles
-
-    # double spaces produce empty splits that must NOT count
-    docs = spark.createDataFrame(
-        [(1, "a  b c"), (2, "x " * 20), (3, "")], "doc_id long, text string"
-    )
-    rows = {r["q"]: r for r in token_count_quantiles(docs, bin_width=4).collect()}
-    # token counts: 3, 20, 0 -> bins 0, 5, 0; p50 lands in bin 0
-    assert (rows[50]["bin_lo"], rows[50]["cum_count"], rows[50]["total_count"]) == (0, 2, 3)
-    assert rows[99]["bin_lo"] == 20
-
-
 def test_new_ops_plans_stay_jvm_side(spark):
     from corhist_spark.graph import bfs_distances, k_core
-    from corhist_spark.sketches import binned_quantiles
 
     edges = _edges(spark, [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")])
     seeds = spark.createDataFrame([("a",)], "node string")
-    vals = spark.createDataFrame([(v,) for v in range(50)], "v int")
     for df in (
         k_core(edges, n_rounds=2),
         bfs_distances(edges, seeds, n_rounds=2),
-        binned_quantiles(vals),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan

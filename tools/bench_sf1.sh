@@ -15,7 +15,7 @@ cd "$(dirname "$0")/.."
 [ -f .sf1/events.parquet ] || python tools/make_sf1.py
 SPARK_GRAFT_SF_DIR="$PWD/.sf1" \
 SPARK_GRAFT_BENCH_REPEATS="${SPARK_GRAFT_BENCH_REPEATS:-1}" \
-SPARK_GRAFT_BENCH_ONLY="exact_dedup,minhash_signatures,lsh_candidates,ngram_jaccard,dedup_survivors,chunk_dedup,semantic_dedup,semantic_dedup_trained,semantic_dedup_trained_sharded,knn_ivf_sharded,subclass_closure,single_value_corrections,unique_value_violations,multi_constraint_corrections,boilerplate_removal,dsir_select,triangle_counts,pagerank,cms_heavy_hitters,hll_shingles,label_propagation,predicate_pmi,bm25_select,random_walks,k_core,bfs_distances,token_quantiles,hits,streaming_dedup,weighted_sample,tfidf_terms,cross_source_dups,neighbor_jaccard,bloom_semi_join,snapshot_delta,ngram_novelty,prefix_jaccard_join" \
+SPARK_GRAFT_BENCH_ONLY="exact_dedup,minhash_signatures,lsh_candidates,ngram_jaccard,dedup_survivors,chunk_dedup,semantic_dedup,semantic_dedup_trained,semantic_dedup_trained_sharded,knn_ivf_sharded,subclass_closure,single_value_corrections,unique_value_violations,multi_constraint_corrections,boilerplate_removal,dsir_select,triangle_counts,pagerank,label_propagation,predicate_pmi,random_walks,k_core,bfs_distances,hits,streaming_dedup,weighted_sample,tfidf_terms,cross_source_dups,neighbor_jaccard,snapshot_delta,ngram_novelty,prefix_jaccard_join" \
 python bench.py 2>/dev/null | tail -1 > BENCH_SF1.json.tmp
 python - <<'EOF'
 import json, subprocess
